@@ -1,7 +1,8 @@
 """Benchmark harness — one JSON line on stdout.
 
 Headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] (default 32):
+local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may run on) with a
+$SPARK_GRAFT_MEM driver heap (default: half the machine's physical memory):
   * kg_pipeline   — the north-star transcript->KG pipeline (extract -> LSH
                     link -> CC canonicalize -> pred-bucketed materialize),
                     sized from the sf's documents row count
@@ -30,7 +31,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+DEFAULT_MEM = os.environ.get(
+    "SPARK_GRAFT_MEM",
+    f"{max(1, os.sysconf('SC_PHYS_PAGES') * os.sysconf('SC_PAGE_SIZE') // 2**31)}g",
+)
 
 
 def make_spark(cpus: int):
@@ -48,7 +53,7 @@ def make_spark(cpus: int):
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "48g"))
+        .config("spark.driver.memory", DEFAULT_MEM)
         # shuffle/spill on tmpfs: the sandbox's virtual disk serializes
         # concurrent writers, which inverts scaling measurements; a real
         # cluster has fast local SSDs for shuffle

@@ -544,7 +544,8 @@ def entailment_rules(level: str) -> list[dict]:
 
 
 def materialize_entailments(kb, level: str = "rdfs", max_rounds: int = 30) -> int:
-    """Run the level's rule set to fixpoint on the KB; returns rounds used.
+    """Run the level's rule set to fixpoint on the KB; returns the number of
+    triples added.
     Idempotent (set-semantics adds), so calling again after new ground facts
     arrive is the incremental-maintenance path."""
     from kr_spark.operators.rules import run_rules_to_fixpoint

@@ -1,39 +1,27 @@
 """Mention detection + relation extraction over transcript turns.
 
-Two interchangeable implementations with identical output (tested equal):
-
-  * extract_relations_expr  — pure Catalyst column expressions (JVM,
-    whole-stage codegen). This is the throughput path AND the oracle-parity
-    path (the DuckDB oracle runs the same closed-form logic in SQL).
-  * extract_relations_arrow — vectorized Arrow-batched mapInPandas using
-    pandas .str ops (no per-row Python), per the north-star's "vectorized
-    Arrow-batched mention detection and relation extraction UDFs". This is
-    the seam where a real NLP model (NER/RE) would plug in; the rule logic
-    is the deterministic reference extractor (FIXTURES.md §D).
+One implementation: `extract_relations_expr`, pure Catalyst column
+expressions that stay inside whole-stage codegen. It is the pipeline path,
+the streaming path and the oracle-parity path (the DuckDB oracle runs the
+same closed-form logic in SQL). Splitting on a fixed trigger phrase is
+string work Catalyst expresses directly, so no Python process sits on the
+extract path. The engine's remaining pandas seams for model code are
+`operators/multimodal.py` and `operators/rules.py::apply_post_processing_rule`
+(mapInPandas) and `streaming/ingest.py` (applyInPandasWithState).
 
 The extractor is the *reference* extractor for P/R purposes: deterministic
 rules keyed on relation trigger phrases (" works at ", " knows ",
 " emailed "), emitting surface-form triples with (conv_id, turn_idx)
-provenance. Emitted surfaces are linked/canonicalized downstream.
-
-Scale notes: both paths are map-only (no shuffle); the Arrow path ships one
-column batch per task through Arrow. Filter `ttype != chatter` happens
-before the UDF so no bytes move for no-entity turns.
+provenance (FIXTURES.md §D). Emitted surfaces are linked/canonicalized
+downstream. It is map-only (no shuffle).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kr_spark.pipeline.transcripts import EMAILED, KNOWS, WORKS_AT
-
-EXTRACTED_SCHEMA = (
-    "subj_surface string, pred string, obj_surface string, conv_id string, turn_idx int"
-)
 
 _TRIGGERS = [(" works at ", WORKS_AT), (" knows ", KNOWS), (" emailed ", EMAILED)]
 
@@ -77,42 +65,6 @@ def extract_relations_expr(transcripts: DataFrame) -> DataFrame:
         F.col("conv_id"),
         F.col("turn_idx"),
     )
-
-
-def extract_relations_arrow(transcripts: DataFrame) -> DataFrame:
-    """Arrow-batched implementation: same rules via vectorized pandas .str."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for phrase, pred in _TRIGGERS:
-                mask = pdf["text"].str.contains(phrase, regex=False)
-                if not mask.any():
-                    continue
-                sel = pdf[mask]
-                split = sel["text"].str.split(phrase, n=1, regex=False)
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "subj_surface": split.str[0],
-                            "pred": pred,
-                            "obj_surface": split.str[1].str.replace(
-                                r" \.$", "", regex=True
-                            ),
-                            "conv_id": sel["conv_id"],
-                            "turn_idx": sel["turn_idx"],
-                        }
-                    )
-                )
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
-
-    pruned = transcripts.select("conv_id", "turn_idx", "text").filter(
-        F.col("text").contains(" works at ")
-        | F.col("text").contains(" knows ")
-        | F.col("text").contains(" emailed ")
-    )
-    return pruned.mapInPandas(op, schema=EXTRACTED_SCHEMA)
 
 
 def mentions_from_extractions(extracted: DataFrame) -> DataFrame:

@@ -1,11 +1,13 @@
-"""Entity linking: MinHash-LSH blocking + vectorized candidate scoring.
+"""Entity linking: MinHash-LSH blocking + Catalyst candidate scoring.
 
-North-star stage: "entity linking via MinHash-LSH blocking plus pandas-UDF
-candidate scoring". Surfaces from mention detection are blocked by
-char-3-gram MinHash bands (operators/dedup.py machinery), candidate pairs
-are scored with an Arrow-batched pandas UDF (char-trigram Jaccard — the seam
-for an embedding/cross-encoder scorer), and scoring survivors become
-same-as edges for connected-components canonicalization.
+Surfaces from mention detection are blocked by char-3-gram MinHash bands
+(operators/dedup.py machinery), candidate pairs are scored by
+`score_candidates_expr` (char-trigram Jaccard as Catalyst array algebra,
+inside whole-stage codegen — the one scorer), and scoring survivors become
+same-as edges for connected-components canonicalization. An embedding or
+cross-encoder scorer is model code; the engine's pandas seams for model
+code are `operators/multimodal.py`,
+`operators/rules.py::apply_post_processing_rule` and `streaming/ingest.py`.
 
 A closed-form normalization key (`normalize_surface`) gives the exact-SQL
 oracle path: the alias design (doubled-letter typo / split form) normalizes
@@ -14,9 +16,6 @@ back to the canonical surface, so link quality is measurable against it.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -64,10 +63,10 @@ def lsh_candidate_pairs(
 
 
 def score_candidates_expr(candidates: DataFrame, threshold: float = 0.55) -> DataFrame:
-    """Char-trigram Jaccard scoring as PURE Catalyst array algebra — the
-    default scorer (VERDICT r1 #7: no Python anywhere in the hot path).
-    Bit-identical to score_candidates_arrow (same trigram definition;
-    asserted in tests), stays inside whole-stage codegen."""
+    """Char-trigram Jaccard scoring as PURE Catalyst array algebra (no
+    Python anywhere in the hot path); stays inside whole-stage codegen.
+    Scores equal a set-Jaccard of `char_shingles` grams (asserted in
+    tests)."""
     ga = char_shingles(F.col("surface_a"))
     gb = char_shingles(F.col("surface_b"))
     inter = F.size(F.array_intersect(ga, gb))
@@ -80,44 +79,14 @@ def score_candidates_expr(candidates: DataFrame, threshold: float = 0.55) -> Dat
     )
 
 
-def score_candidates_arrow(candidates: DataFrame, threshold: float = 0.55) -> DataFrame:
-    """Arrow-batched pandas scoring of candidate pairs: char-trigram Jaccard.
-    This is the PLUGGABLE scorer seam (swap the batch body for an embedding
-    cosine or cross-encoder — the real-world case needing Python); for the
-    plain trigram metric the default pipeline path is the Catalyst
-    score_candidates_expr."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def grams(s: str) -> set:
-            s = "".join(s.lower().split())
-            return {s[i : i + 3] for i in range(max(len(s) - 2, 1))}
-
-        for pdf in batches:
-            ga = pdf["surface_a"].map(grams)
-            gb = pdf["surface_b"].map(grams)
-            inter = [len(a & b) for a, b in zip(ga, gb)]
-            union = [len(a | b) for a, b in zip(ga, gb)]
-            score = [i / u if u else 0.0 for i, u in zip(inter, union)]
-            out = pdf.assign(score=score)
-            yield out[out["score"] >= threshold]
-
-    return candidates.mapInPandas(
-        op, schema="surface_a string, surface_b string, score double"
-    )
-
-
 def link_entities(
     mentions: DataFrame,
     surface_col: str = "surface",
     threshold: float = 0.55,
-    scorer: str = "expr",
 ) -> DataFrame:
-    """Full linking: blocking -> scoring -> same-as edges (a, b).
-    scorer: 'expr' (Catalyst, default) or 'arrow' (pandas-UDF seam for
-    model-based scorers) — identical output for the trigram metric."""
+    """Full linking: blocking -> scoring -> same-as edges (a, b)."""
     cand = lsh_candidate_pairs(mentions, surface_col)
-    score_fn = score_candidates_expr if scorer == "expr" else score_candidates_arrow
-    scored = score_fn(cand, threshold)
+    scored = score_candidates_expr(cand, threshold)
     return scored.select(F.col("surface_a").alias("a"), F.col("surface_b").alias("b"))
 
 

@@ -146,16 +146,12 @@ def run_extract_stage(
     out_dir: str,
     n_buckets: int = 8,
     fail_after: int | None = None,
-    use_arrow_extractor: bool = True,
 ) -> int:
     """Bucketed, resumable extraction. Returns number of buckets run now.
 
     fail_after: test hook — raise after N buckets to simulate a mid-run kill.
     """
-    from kr_spark.pipeline.extract import (
-        extract_relations_arrow,
-        extract_relations_expr,
-    )
+    from kr_spark.pipeline.extract import extract_relations_expr
 
     done = completed_buckets(out_dir)
     if "__bucket" in transcripts.columns:
@@ -169,10 +165,8 @@ def run_extract_stage(
 
     n_workers = min(8, max(1, n_buckets))
     # per-bucket task width: concurrent bucket jobs share the cluster, so
-    # give each roughly cores/n_workers tasks. Without this, k concurrent
-    # jobs x full-width scans queue k*cores tiny tasks, and every Arrow UDF
-    # task forks a fresh Python worker — the fork storm costs more than the
-    # extraction itself (observed 5x wall-time at local[32]).
+    # give each roughly cores/n_workers tasks. Without this bound, k
+    # concurrent jobs x full-width scans queue k*cores tiny tasks.
     width = max(1, spark.sparkContext.defaultParallelism // n_workers)
 
     def _run_bucket(b: int) -> None:
@@ -184,8 +178,9 @@ def run_extract_stage(
         # nodes — one action per bucket instead of write + two count jobs
         obs_in, obs_out = Observation(), Observation()
         part = part.observe(obs_in, F.count(F.lit(1)).alias("n"))
-        extractor = extract_relations_arrow if use_arrow_extractor else extract_relations_expr
-        extracted = extractor(part).observe(obs_out, F.count(F.lit(1)).alias("n"))
+        extracted = extract_relations_expr(part).observe(
+            obs_out, F.count(F.lit(1)).alias("n")
+        )
         path = os.path.join(out_dir, "stage_extract", f"bucket={b}")
         extracted.write.mode("overwrite").parquet(path)
         rows_in = obs_in.get["n"]
@@ -200,7 +195,6 @@ def run_extract_stage(
                 "wall_s": round(time.time() - t0, 3),
                 "lineage": {
                     "stage": "extract",
-                    "extractor": "arrow" if use_arrow_extractor else "expr",
                     "input": "transcripts",
                     "bucket_fn": f"pmod(xxhash64(conv_id), {n_buckets})",
                 },
@@ -318,7 +312,6 @@ def run_pipeline(
     out_dir: str,
     n_buckets: int = 8,
     fail_after: int | None = None,
-    use_arrow_extractor: bool = True,
     snapshot_input: bool = True,
 ) -> DataFrame:
     """End-to-end: input snapshot + resumable extract stage + global
@@ -388,7 +381,6 @@ def run_pipeline(
         out_dir,
         n_buckets=effective,
         fail_after=fail_after,
-        use_arrow_extractor=use_arrow_extractor,
     )
     return materialize_triples(spark, out_dir)
 

@@ -46,7 +46,6 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--buckets", type=int, default=16)
     ap.add_argument("--cores", type=int, default=None, help="local[N]; default local[*]")
-    ap.add_argument("--extractor", choices=["arrow", "expr"], default="arrow")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -94,7 +93,6 @@ def main() -> None:
         transcripts,
         args.out,
         n_buckets=args.buckets,
-        use_arrow_extractor=(args.extractor == "arrow"),
         snapshot_input=not args.no_snapshot,
     )
     n_triples = triples.count()

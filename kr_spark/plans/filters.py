@@ -913,12 +913,18 @@ def _apply_op_body(kb, op: str, args, A: list, plan_vars: set) -> _Val:
         )
 
     # ---- hash builtins ----
-    if op == ":md5":
-        return _Val(plain=F.md5(A[0].string().cast("binary")))
-    if op == ":sha1":
-        return _Val(plain=F.sha1(A[0].string().cast("binary")))
-    if op in (":sha256", ":sha384", ":sha512"):
-        return _Val(plain=F.sha2(A[0].string().cast("binary"), int(op[4:])))
+    if op in (":md5", ":sha1", ":sha256", ":sha384", ":sha512"):
+        if A[0].struct is None and (A[0].is_bool or A[0].is_num):
+            # a composed boolean/numeric argument is never a string literal:
+            # the _STRING_ARG_OPS gate unbinds every row, and Spark refuses
+            # the BOOLEAN -> BINARY cast at analysis, so hash nothing
+            return _Val(plain=F.lit(None).cast("string"))
+        data = A[0].string().cast("binary")
+        if op == ":md5":
+            return _Val(plain=F.md5(data))
+        if op == ":sha1":
+            return _Val(plain=F.sha1(data))
+        return _Val(plain=F.sha2(data, int(op[4:])))
 
     raise ValueError(f"unknown filter operator {op!r}")
 

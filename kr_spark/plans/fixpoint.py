@@ -23,6 +23,36 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _semi_naive(
+    step: DataFrame,
+    frontier: DataFrame,
+    reach: DataFrame,
+    src: str,
+    dst: str,
+    max_iters: int,
+    name: str,
+) -> DataFrame:
+    """Semi-naive loop shared by both path fixpoints: frontier ⋈ step, dedup,
+    anti-join against `reach`, union, repeat until the frontier is empty.
+    `step` is the deduplicated, checkpointed edge relation."""
+    # step with src renamed to the join key — frontier.dst == step.src
+    hop = step.withColumnRenamed(src, "__mid").withColumnRenamed(dst, "__hop_dst")
+    for _ in range(max_iters):
+        nxt = (
+            frontier.withColumnRenamed(dst, "__mid")
+            .join(hop, on="__mid")
+            .select(F.col(src), F.col("__hop_dst").alias(dst))
+            .dropDuplicates([src, dst])
+            .join(reach, on=[src, dst], how="left_anti")
+            .localCheckpoint()
+        )
+        if nxt.isEmpty():
+            return reach
+        reach = reach.unionByName(nxt).localCheckpoint()
+        frontier = nxt
+    raise RuntimeError(f"{name} did not converge in {max_iters} iterations")
+
+
 def transitive_closure(
     step: DataFrame,
     src: str = "src",
@@ -34,26 +64,7 @@ def transitive_closure(
     Semi-naive: frontier ⋈ step, anti-join against known, union, repeat.
     """
     step = step.select(src, dst).dropDuplicates([src, dst]).localCheckpoint()
-    # step with src renamed to the join key — frontier.dst == step.src
-    hop = step.withColumnRenamed(src, "__mid").withColumnRenamed(dst, "__hop_dst")
-    reach = step
-    frontier = step
-    for _ in range(max_iters):
-        nxt = (
-            frontier.withColumnRenamed(dst, "__mid")
-            .join(hop, on="__mid")
-            .select(F.col(src), F.col("__hop_dst").alias(dst))
-            .dropDuplicates([src, dst])
-            .join(reach, on=[src, dst], how="left_anti")
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            break
-        reach = reach.unionByName(nxt).localCheckpoint()
-        frontier = nxt
-    else:
-        raise RuntimeError(f"transitive_closure did not converge in {max_iters} iterations")
-    return reach
+    return _semi_naive(step, step, step, src, dst, max_iters, "transitive_closure")
 
 
 def reachable_pairs(
@@ -74,7 +85,6 @@ def reachable_pairs(
     frontier hop, not a closure-doubling.
     """
     step = step.select(src, dst).dropDuplicates([src, dst]).localCheckpoint()
-    hop = step.withColumnRenamed(src, "__mid").withColumnRenamed(dst, "__hop_dst")
     frontier = (
         seeds.select(F.col("node").alias(src))
         .dropDuplicates([src])
@@ -82,20 +92,7 @@ def reachable_pairs(
         .localCheckpoint()
     )
     reach = step.limit(0).localCheckpoint()
-    for _ in range(max_iters):
-        nxt = (
-            frontier.withColumnRenamed(dst, "__mid")
-            .join(hop, on="__mid")
-            .select(F.col(src), F.col("__hop_dst").alias(dst))
-            .dropDuplicates([src, dst])
-            .join(reach, on=[src, dst], how="left_anti")
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            return reach
-        reach = reach.unionByName(nxt).localCheckpoint()
-        frontier = nxt
-    raise RuntimeError(f"reachable_pairs did not converge in {max_iters} iterations")
+    return _semi_naive(step, frontier, reach, src, dst, max_iters, "reachable_pairs")
 
 
 def _driver_union_find(und_rows, spark, node_type) -> DataFrame:

@@ -29,16 +29,11 @@ def stream_extract_to_parquet(
     input_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    use_arrow_extractor: bool = False,
 ):
     """File-source streaming: watch input_dir for transcript parquet,
     extract relations per micro-batch, append parquet. Returns the query."""
-    from kr_spark.pipeline.extract import (
-        extract_relations_arrow,
-        extract_relations_expr,
-    )
+    from kr_spark.pipeline.extract import extract_relations_expr
 
-    extractor = extract_relations_arrow if use_arrow_extractor else extract_relations_expr
     stream = (
         spark.readStream.schema(TRANSCRIPT_DDL)
         .parquet(input_dir)
@@ -46,7 +41,7 @@ def stream_extract_to_parquet(
     )
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        extracted = extractor(batch_df).withColumn("epoch", F.lit(epoch_id))
+        extracted = extract_relations_expr(batch_df).withColumn("epoch", F.lit(epoch_id))
         extracted.write.mode("append").parquet(out_dir)
 
     return (
@@ -74,7 +69,7 @@ def assemble_conversations_stateful(
     reached — or, with `idle_timeout_ms`, when the key goes idle.
 
     This is the streaming front half of the KG pipeline: assembled rows feed
-    the same extractors the batch path uses. State is bounded per key
+    the same extractor the batch path uses. State is bounded per key
     (one array of turns) and dropped at emission; completion-based emission
     is deterministic under replay, so the operator is exactly-once under
     checkpointing.

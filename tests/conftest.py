@@ -1,5 +1,13 @@
 import pytest
+from hypothesis import settings
 from pyspark.sql import SparkSession
+
+# Reproducible fuzzers: every per-test @settings inherits derandomize=True,
+# so a run's examples depend only on the test, never on a random seed. An
+# exploratory random run picks Hypothesis's own profile instead:
+#   pytest tests/ --hypothesis-profile=default
+settings.register_profile("repro", derandomize=True)
+settings.load_profile("repro")
 
 
 @pytest.fixture(scope="session")

@@ -154,6 +154,25 @@ def test_hash_builtins(kb):
     assert kb2_rows[0]["h"].v == hashlib.sha256(b"Alice").hexdigest()
 
 
+@pytest.mark.parametrize("op", [":md5", ":sha1", ":sha256", ":sha384", ":sha512"])
+def test_hash_over_boolean_or_numeric_is_unbound(kb, op):
+    # §17.4.4 hashes take a string literal: a composed boolean or numeric
+    # argument is a per-row type error (Jena: unbound), never an analysis
+    # failure of the whole query (BOOLEAN -> BINARY cast)
+    load_fixture(kb, TEST_TRIPLES_NUMBERS)
+    rows = kb.query(
+        [
+            ("ex/a", "foaf/givenname", "?/g"),
+            (":bind", (op, (":contains", "?/g", ["li"])), "?/hb"),
+            (":bind", (op, ("+", (":strlen", "?/g"), 1)), "?/hn"),
+            (":bind", (op, "?/g"), "?/hs"),
+        ]
+    )
+    assert len(rows) == 1
+    assert rows[0].get("hb") is None and rows[0].get("hn") is None
+    assert rows[0]["hs"].v  # a string argument still hashes
+
+
 def test_strbefore_strafter_edges(kb):
     # SPARQL 1.1 §17.4.3.8-9: empty separator -> STRBEFORE = "", STRAFTER =
     # the whole string; missing separator -> "" for both
@@ -716,7 +735,7 @@ def test_str_bnode_is_error_and_concat_identity(kb):
     assert b["i"].v == "http://www.example.org/a"
 
 
-def test_random_string_builtins_never_throw(kb):
+def test_random_string_builtins_never_throw(kb, request):
     """100 TB availability invariant, string twin of
     test_random_arithmetic_never_throws: random §17.4.3 builtin trees over
     adversarial term types (IRIs, bnodes, numerics, lang-tagged, empty
@@ -762,6 +781,9 @@ def test_random_string_builtins_never_throw(kb):
         suppress_health_check=[HealthCheck.function_scoped_fixture],
     )
     def run(e):
+        if request.config.getoption("--hypothesis-profile") is None:
+            # the derandomized profile of tests/conftest.py reaches here
+            assert settings.default.derandomize
         if not isinstance(e, tuple):
             e = (":str", e)
         kb.query([("?/s", "ex/v", "?/v"), (":bind", e, "?/r")])
