@@ -1250,14 +1250,9 @@ def q_sparql_builtins(spark, sf_dir):
 
 def q_describe(spark, sf_dir):
     """DESCRIBE through the raw-string surface: concise bounded description
-    of three nation URIs (all their triples; the bnode-closure loop exits
-    immediately on this KB). The subject IN-filter is pushed into every
-    union branch as a scan-level DataFilter (map-only, no shuffle); the
-    branches themselves are NOT statically pruned — Catalyst cannot refute
-    concat('..cust/', key) IN ('..nat/1', ...) — so on a derived-union KB
-    DESCRIBE reads each branch's key columns once. On the durable
-    pred-bucketed store (sources/store.py) the same call is a single
-    subject-filtered scan."""
+    of three nation URIs (all their triples; this KB has no blank-node
+    objects, so the blank-node closure is empty). The subjects semi-join
+    the KB on `s`; on a derived-union KB every branch is read once."""
     kb = make_kb(spark, sf_dir)
     df = kb.sparql_describe("DESCRIBE kgn:1 kgn:2 kgn:3")
     return df.select("s", "p", "o")

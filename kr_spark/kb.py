@@ -691,40 +691,31 @@ class KB:
 
     def describe(self, *subjects, subjects_df: DataFrame | None = None) -> DataFrame:
         """DESCRIBE: concise bounded description — all triples whose subject
-        is one of `subjects`, plus the transitive closure through blank-node
-        objects (the CBD Jena computes for the reference's raw DESCRIBE
-        strings). Blank-node chains are rare and shallow in practice; the
-        loop is driver-paced with a depth cap, each step one semi-join.
+        is one of `subjects` or a blank node reached from one through a
+        chain of blank-node objects (the CBD Jena computes for the
+        reference's raw DESCRIBE strings). The reached blank nodes come
+        from the shared semi-naive fixpoint (`reachable_pairs`, one
+        checkpointed frontier hop per chain level) over the s -> o edges
+        whose object is a blank node, seeded by the subjects.
 
         subjects_df: alternative seed — a DataFrame with one column `s` of
         subject values; stays distributed (no driver collect), used by
         DESCRIBE ?v WHERE {...} where the binding set can be huge."""
+        from kr_spark.plans.fixpoint import reachable_pairs
+
         df = self.df()
         if subjects_df is not None:
-            seed = df.join(subjects_df.select("s").distinct(), on="s", how="left_semi")
+            seeds = subjects_df.select(F.col("s").alias("node"))
         else:
-            vals = [self.term(s).v for s in subjects]
-            seed = df.filter(F.col("s").isin(vals))
-        out = seed
-        visited = seed.select("s").distinct()
-        frontier = (
-            seed.filter(F.col("o_kind") == KIND_BNODE)
-            .select(F.col("o").alias("s"))
-            .distinct()
-        )
-        for _ in range(16):  # CBD bnode-chain depth cap
-            frontier = frontier.join(visited, on="s", how="left_anti")
-            if frontier.isEmpty():
-                break
-            step = df.join(frontier, on="s", how="left_semi")
-            out = out.unionByName(step)
-            visited = visited.unionByName(frontier).distinct()
-            frontier = (
-                step.filter(F.col("o_kind") == KIND_BNODE)
-                .select(F.col("o").alias("s"))
-                .distinct()
+            seeds = self.spark.createDataFrame(
+                [(self.term(s).v,) for s in subjects], "node string"
             )
-        return out
+        bnode_edges = df.filter(F.col("o_kind") == KIND_BNODE).select(
+            F.col("s").alias("src"), F.col("o").alias("dst")
+        )
+        reached = reachable_pairs(bnode_edges, seeds).select(F.col("dst").alias("s"))
+        described = seeds.select(F.col("node").alias("s")).union(reached).distinct()
+        return df.join(described, on="s", how="left_semi")
 
     def sparql_describe(self, text: str) -> DataFrame:
         """DESCRIBE string -> triple DataFrame (CBD per `describe`)."""

@@ -80,15 +80,6 @@ def _seed_filter(pairs: DataFrame, seed: DataFrame | None) -> DataFrame:
     )
 
 
-def _identity_over_seed(kb, seed: DataFrame, graph_scope) -> DataFrame:
-    """Zero-length pairs for seed nodes that occur in the graph (matches the
-    unseeded identity-over-graph-terms domain, so `a p* ?x` keeps its
-    self-binding exactly when the unseeded plan would)."""
-    nodes = _graph_nodes(kb, graph_scope)
-    present = seed.select("node").join(nodes, on="node", how="left_semi")
-    return present.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-
-
 def _dst_seed(pairs: DataFrame) -> DataFrame:
     return pairs.select(F.col("dst").alias("node")).dropDuplicates(["node"]).localCheckpoint()
 
@@ -145,9 +136,22 @@ def _graph_nodes(kb, graph_scope) -> DataFrame:
     return subs.union(objs).distinct()
 
 
-def _identity_pairs(kb, graph_scope) -> DataFrame:
-    n = _graph_nodes(kb, graph_scope)
-    return n.select(F.col("node").alias("src"), F.col("node").alias("dst"))
+def _identity(kb, seed: DataFrame | None, graph_scope) -> DataFrame:
+    """Zero-length pairs over every graph term, or over the seed nodes that
+    occur in the graph (the same domain, so `a p* ?x` keeps its
+    self-binding exactly when the unseeded plan would)."""
+    nodes = _graph_nodes(kb, graph_scope)
+    if seed is not None:
+        nodes = seed.select("node").join(nodes, on="node", how="left_semi")
+    return nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
+
+
+def _closure(step: DataFrame, seed: DataFrame | None) -> DataFrame:
+    """One-or-more-step pairs: the full closure, or the frontier walk from
+    the seed."""
+    if seed is None:
+        return transitive_closure(step)
+    return reachable_pairs(step, seed)
 
 
 def _seq_join(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -190,75 +194,40 @@ def compile_path_element(kb, spec, graph_scope, seed: DataFrame | None = None) -
         return _seed_filter(_base_pairs(kb, spec, graph_scope), seed)
 
     if isinstance(spec, list):
-        # modifier vector (sparql.clj:144-165)
+        # modifier vector (sparql.clj:144-165); with a seed the step
+        # relation is still compiled unseeded (it must cover mid-path hops),
+        # but the closure walks only the seed's frontier
         mods = spec[1:]
         _check_modifiers(spec, mods)
-        if seed is not None:
-            # step relation is compiled unseeded (it must cover mid-path
-            # hops), but the iteration walks only the seed's frontier
-            step = compile_path_element(kb, spec[0], graph_scope)
-            if len(mods) == 1 and mods[0] == "*":
-                return reachable_pairs(step, seed).union(
-                    _identity_over_seed(kb, seed, graph_scope)
-                ).dropDuplicates(["src", "dst"])
-            if len(mods) == 1 and mods[0] == "+":
-                return reachable_pairs(step, seed)
-            if len(mods) == 1 and mods[0] == "?":
-                return _seed_filter(step, seed).union(
-                    _identity_over_seed(kb, seed, graph_scope)
-                ).dropDuplicates(["src", "dst"])
-            if len(mods) == 1:
-                return _repeat_exact(kb, step, int(mods[0]), graph_scope, seed)
-            n, m = mods[0], mods[1]
-            if n is None and m is None:
-                return reachable_pairs(step, seed).union(
-                    _identity_over_seed(kb, seed, graph_scope)
-                ).dropDuplicates(["src", "dst"])
-            if m is None:  # p{n,} = p{n} / p*
-                left = _repeat_exact(kb, step, int(n), graph_scope, seed)
-                mid = _dst_seed(left)
-                star = reachable_pairs(step, mid).union(
-                    _identity_over_seed(kb, mid, graph_scope)
-                ).dropDuplicates(["src", "dst"])
-                return _seq_join(left, star).dropDuplicates(["src", "dst"])
-            n = 0 if n is None else int(n)
-            outs = [
-                _repeat_exact(kb, step, k, graph_scope, seed)
-                for k in range(n, int(m) + 1)
-            ]
-            df = outs[0]
-            for o in outs[1:]:
-                df = df.union(o)
-            return df.dropDuplicates(["src", "dst"])
+        step = compile_path_element(kb, spec[0], graph_scope)
 
-        inner = compile_path_element(kb, spec[0], graph_scope)
-        if len(mods) == 1 and mods[0] == "*":
-            return transitive_closure(inner).union(
-                _identity_pairs(kb, graph_scope)
+        def star(seed):
+            return _closure(step, seed).union(
+                _identity(kb, seed, graph_scope)
             ).dropDuplicates(["src", "dst"])
-        if len(mods) == 1 and mods[0] == "+":
-            return transitive_closure(inner)
-        if len(mods) == 1 and mods[0] == "?":
-            return inner.union(_identity_pairs(kb, graph_scope)).dropDuplicates(
-                ["src", "dst"]
-            )
+
+        if mods in (["*"], [None, None]):
+            return star(seed)
+        if mods == ["+"]:
+            return _closure(step, seed)
+        if mods == ["?"]:
+            return _seed_filter(step, seed).union(
+                _identity(kb, seed, graph_scope)
+            ).dropDuplicates(["src", "dst"])
         # numeric bounds [p n] / [p n m] / [p None m] / [p n None]
         # (number-path-element, sparql.clj:148-157)
         if len(mods) == 1:
-            n = int(mods[0])
-            return _repeat_exact(kb, inner, n, graph_scope)
-        n, m = mods[0], mods[1]
-        if n is None and m is None:
-            return transitive_closure(inner).union(
-                _identity_pairs(kb, graph_scope)
-            ).dropDuplicates(["src", "dst"])
+            return _repeat_exact(kb, step, int(mods[0]), graph_scope, seed)
+        n, m = mods
         if m is None:  # p{n,} = p{n} / p*
-            star = transitive_closure(inner).union(
-                _identity_pairs(kb, graph_scope)
-            ).dropDuplicates(["src", "dst"])
-            return _seq_join(_repeat_exact(kb, inner, int(n), graph_scope), star).dropDuplicates(["src", "dst"])
+            left = _repeat_exact(kb, step, int(n), graph_scope, seed)
+            right = star(None if seed is None else _dst_seed(left))
+            return _seq_join(left, right).dropDuplicates(["src", "dst"])
         n = 0 if n is None else int(n)
-        outs = [_repeat_exact(kb, inner, k, graph_scope) for k in range(n, int(m) + 1)]
+        outs = [
+            _repeat_exact(kb, step, k, graph_scope, seed)
+            for k in range(n, int(m) + 1)
+        ]
         df = outs[0]
         for o in outs[1:]:
             df = df.union(o)
@@ -323,9 +292,7 @@ def compile_path_element(kb, spec, graph_scope, seed: DataFrame | None = None) -
 
 def _repeat_exact(kb, pairs: DataFrame, n: int, graph_scope, seed: DataFrame | None = None) -> DataFrame:
     if n == 0:
-        if seed is not None:
-            return _identity_over_seed(kb, seed, graph_scope)
-        return _identity_pairs(kb, graph_scope)
+        return _identity(kb, seed, graph_scope)
     df = _seed_filter(pairs, seed)
     for _ in range(n - 1):
         df = _seq_join(df, pairs)

@@ -7,6 +7,7 @@ Python in any evaluation path.
 
 import pytest
 
+from kr_spark.plans.filters import XSD_CAST_TYPES
 from tests.conftest import TEST_TRIPLES_NUMBERS, load_fixture
 
 PREFIXES = """
@@ -346,6 +347,15 @@ def test_describe_cbd(kb):
     # 2 direct triples + 2 via addr1 + 1 via pt1; Bob excluded
     assert len(rows) == 5
     assert not any(r["s"].endswith("/b") for r in rows)
+
+
+def test_describe_follows_a_deep_blank_node_chain(kb):
+    # ex/a -> _:b1 -> ... -> _:b20 -> "end": every link is in the CBD
+    chain = [("ex/a", "ex/next", "_/b1")]
+    chain += [(f"_/b{i}", "ex/next", f"_/b{i + 1}") for i in range(1, 20)]
+    chain += [("_/b20", "ex/next", "end")]
+    load_fixture(kb, chain + [("ex/z", "ex/next", "_/b1")])
+    assert kb.describe("ex/a").count() == 21
 
 
 def test_sparql_describe_string(kb):
@@ -787,5 +797,180 @@ def test_random_string_builtins_never_throw(kb, request):
         if not isinstance(e, tuple):
             e = (":str", e)
         kb.query([("?/s", "ex/v", "?/v"), (":bind", e, "?/r")])
+
+    run()
+
+
+# ---- composition invariant: a composed value behaves exactly like the
+# term it binds — op(e) == op(?t) after BIND(e AS ?t), and nothing raises
+
+# how each builtin is applied to its expression arguments in the sweeps
+# below: op -> (number of expression args, build function). Constant-only
+# slots (REGEX/REPLACE patterns, the cast's type name) are filled in here.
+_UNARY = (
+    ":bound", ":isIRI", ":isURI", ":isBlank", ":isLiteral", ":str", ":lang",
+    ":datatype", ":ebv", ":not", "!", ":strlen", ":ucase", ":lcase",
+    ":encode_for_uri", ":abs", ":round", ":ceil", ":floor", ":iri", ":uri",
+    ":bnode", ":md5", ":sha1", ":sha256", ":sha384", ":sha512", ":isNumeric",
+    ":year", ":month", ":day", ":hours", ":minutes", ":seconds", ":tz",
+    ":timezone",
+)
+_BINARY = (
+    "=", "!=", "<", ">", "<=", ">=", "*", "/", "+", "-", ":sameTerm",
+    ":langMatches", ":contains", ":strstarts", ":strends", ":strbefore",
+    ":strafter", ":strdt", ":strlang", ":and", ":or", ":concat", ":in",
+    ":not-in", ":coalesce", ":substr",
+)
+COMPOSE = {op: (1, lambda a, op=op: (op, *a)) for op in _UNARY}
+COMPOSE.update({op: (2, lambda a, op=op: (op, *a)) for op in _BINARY})
+COMPOSE.update({
+    ":regex": (1, lambda a: (":regex", a[0], ["li"])),
+    ":replace": (1, lambda a: (":replace", a[0], ["l"], ["L"])),
+    ":if": (3, lambda a: (":if", *a)),
+})
+# every builtin except EXISTS (pattern-level), NOW (needs a pinned clock),
+# the nondeterministic RAND/UUID/STRUUID, and the cast (typed separately)
+_NOT_COMPOSED = {":exists-expr", ":now", ":rand", ":uuid", ":struuid", ":xsd-cast"}
+
+
+def _cast(typ):
+    return lambda a: (":xsd-cast", typ, a[0])
+
+
+def _assert_binds_agree(kb, head, cases, batch=24):
+    """Each case is (build, exprs): evaluate build(exprs) directly and
+    build(?t...) with ?t = BIND(expr) for each expr, in the same query;
+    both must bind the same term (or both stay unbound) on every row of
+    `head`. Each distinct expr is bound once per query."""
+    bad = []
+    for i in range(0, len(cases), batch):
+        tvar, binds, out = {}, [], []
+        for j, (build, exprs) in enumerate(cases[i : i + batch]):
+            for e in exprs:
+                tvar.setdefault(repr(e), (e, f"?/t{len(tvar)}"))
+            ts = [tvar[repr(e)][1] for e in exprs]
+            direct = build(list(exprs))
+            binds += [(":bind", direct, f"?/d{j}"), (":bind", build(ts), f"?/b{j}")]
+            out.append((j, direct))
+        rows = kb.query(
+            head + [(":bind", e, t) for e, t in tvar.values()] + binds
+        )
+        assert rows
+        for r in rows:
+            bad += [
+                (direct, r.get(f"d{j}"), r.get(f"b{j}"))
+                for j, direct in out
+                if r.get(f"d{j}") != r.get(f"b{j}")
+            ]
+    assert not bad, bad
+
+
+def test_composed_values_behave_like_their_bound_terms(kb):
+    # each composition aborted the query or answered differently directly
+    # and through a bound variable: = != < <= > >= IN NOT-IN sameTerm
+    # LANGMATCHES with a boolean side failed with CAST_INVALID_INPUT
+    # ('Alice' -> BOOLEAN) and BNODE(boolean) at analysis; ABS/CEIL/FLOOR/
+    # ROUND of a boolean or of STR(?a) gave 1/40, isNumeric of them true,
+    # IRI(boolean) a Python True, xsd:string(boolean) "True",
+    # xsd:boolean(STR(?a)) true; STRLEN(?g)+1 < ?g and DATATYPE(?a) < ?g
+    # compared as strings; SUBSTR(?g, e) over a non-numeric e kept the
+    # whole string; LANGMATCHES(?l, "en") was false for ?l = LANG(?g)
+    load_fixture(kb, TEST_TRIPLES_NUMBERS)
+    head = [("ex/a", "foaf/age", "?/a"), ("ex/a", "foaf/givenname", "?/g")]
+    booleans = [(":contains", "?/g", ["li"]), ("<", "?/a", 50), (":isNumeric", "?/a")]
+    strlen1, dt, str_a = ("+", (":strlen", "?/g"), 1), (":datatype", "?/a"), (":str", "?/a")
+    lang = (":lang", "?/g")
+
+    def both_slots(ops, e):
+        return [(COMPOSE[op][1], args) for op in ops for args in ([e, "?/g"], ["?/g", e])]
+
+    def unary(ops, e):
+        return [(COMPOSE[op][1], [e]) for op in ops]
+
+    cases = [(COMPOSE[":langMatches"][1], [lang, ["en"]])]
+    for e in booleans:
+        cases += both_slots(["=", "!=", "<", "<=", ">", ">=", ":in", ":not-in", ":sameTerm"], e)
+        cases += unary([":bnode", ":abs", ":ceil", ":floor", ":round", ":iri", ":uri", ":isNumeric"], e)
+        cases += [(COMPOSE[":langMatches"][1], ["?/g", e]), (_cast("string"), [e])]
+    for e in (strlen1, dt):
+        cases += both_slots(["<", "<=", ">", ">="], e)
+    cases += unary([":abs", ":ceil", ":floor", ":round", ":isNumeric"], str_a)
+    cases += [(_cast("boolean"), [str_a])]
+    cases += [(COMPOSE[":substr"][1], ["?/g", e]) for e in booleans + [dt, str_a, lang]]
+    _assert_binds_agree(kb, head, cases)
+
+
+def test_random_compositions_behave_like_their_bound_terms(kb):
+    """Metamorphic fuzzer: a random builtin (every FILTER_OPS builtin but
+    EXISTS, NOW and the nondeterministic ones; the cast with a drawn target
+    type) over random boolean, numeric, string, IRI and term subtrees must
+    bind the same value as the same builtin over variables bound to those
+    subtrees, on every row of an adversarial fixture, and never raise.
+    Several draws share one Spark query. Runs under the derandomized
+    profile of tests/conftest.py; a random run:
+    pytest tests/test_builtins.py --hypothesis-profile=default -k random_compositions"""
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    from kr_spark.plans.filters import FILTER_OPS
+
+    # a new builtin must join the table to be fuzzed
+    assert set(COMPOSE) == set(FILTER_OPS) - _NOT_COMPOSED
+    load_fixture(
+        kb,
+        [
+            ("ex/a", "ex/v", ["plain"]),
+            ("ex/b", "ex/v", ["hi", "fr"]),
+            ("ex/c", "ex/v", [7, "xsd/integer"]),
+            ("ex/d", "ex/v", "ex/an-iri"),
+            ("ex/e", "ex/v", "_/bn"),
+            ("ex/f", "ex/v", [""]),
+            ("ex/g", "ex/v", ["2.5", "xsd/double"]),
+            ("ex/h", "ex/v", [True, "xsd/boolean"]),
+            ("ex/i", "ex/v", ["2011-01-10T14:45:13-05:00", "xsd/dateTime"]),
+            ("ex/j", "ex/v", ["en"]),
+        ],
+    )
+    head = [("?/s", "ex/v", "?/v")]
+    terms = st.sampled_from(
+        ["?/v", ["x"], ["Y", "en"], 3, ["2.5", "xsd/decimal"], [""], "ex/a"]
+    )
+    subtrees = st.sampled_from(
+        [
+            # boolean
+            (":contains", "?/v", ["a"]), ("<", "?/v", 5), (":isNumeric", "?/v"),
+            (":isIRI", "?/v"), ("=", "?/v", 7),
+            # numeric
+            ("+", (":strlen", "?/v"), 1), ("*", "?/v", 2), (":abs", "?/v"),
+            ("/", "?/v", 4), (":year", "?/v"),
+            # string
+            (":str", "?/v"), (":lang", "?/v"), (":md5", "?/v"), (":tz", "?/v"),
+            (":encode_for_uri", "?/v"),
+            # IRI
+            (":datatype", "?/v"),
+            # term-minting
+            (":ucase", "?/v"), (":concat", "?/v", ["!"]), (":iri", (":str", "?/v")),
+        ]
+    )
+    ops = sorted(COMPOSE) + [":xsd-cast"]
+
+    @st.composite
+    def composition(draw):
+        op = draw(st.sampled_from(ops))
+        if op == ":xsd-cast":
+            build, n = _cast(draw(st.sampled_from(sorted(XSD_CAST_TYPES)))), 1
+        else:
+            n, build = COMPOSE[op]
+        exprs = draw(st.lists(st.one_of(subtrees, terms), min_size=n, max_size=n))
+        return build, exprs
+
+    @given(cases=st.lists(composition(), min_size=3, max_size=3))
+    @settings(
+        max_examples=200,
+        deadline=None,
+        suppress_health_check=[HealthCheck.function_scoped_fixture],
+    )
+    def run(cases):
+        _assert_binds_agree(kb, head, cases)
 
     run()
